@@ -34,15 +34,10 @@ def no_broadcast(spark):
     ["tpch_q3_shipping_priority", "tpch_q9_product_type_profit"],
 )
 def test_flip_replans_to_shuffle_join_with_same_results(
-    spark, sf_dir, name, no_broadcast, monkeypatch
+    spark, sf_dir, name, no_broadcast
 ):
-    # q3's explicit broadcast of the orders⋈customer join output is
-    # guarded by the on-disk size of orders (its catalog-stats stand-in);
-    # simulate the outgrown input so the guard takes the shuffle branch,
-    # the way a 100 TB orders table would.
-    from warehouse_pg_spark.queries import tpch
-
-    monkeypatch.setattr(tpch, "_table_bytes", lambda sf_dir, name: 1 << 60)
+    # q3's explicit broadcast of the orders⋈customer join output must
+    # honour the disabled threshold too
     plan = plan_of(spark, sf_dir, name)
     # the un-hinted (linear-growth) joins must no longer broadcast
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan

@@ -52,6 +52,17 @@ def test_asof_basic(spark, asof_frames):
     assert out.count() == trades.count()  # left rows preserved
 
 
+def test_asof_no_keys(spark, asof_frames):
+    # empty `on`: one global as-of match over every right row
+    trades, quotes = asof_frames
+    out = asof_join(
+        trades, quotes, on=[], left_ts="tts", right_ts="qts",
+        right_values=["price"],
+    )
+    rows = {(r.key, r.qty): r.asof_price for r in out.collect()}
+    assert rows == {(1, 5): 200.0, (1, 6): 101.0, (2, 7): 100.0, (3, 8): 100.0}
+
+
 def test_asof_strict(spark, asof_frames):
     trades, quotes = asof_frames
     out = asof_join(

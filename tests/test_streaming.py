@@ -253,3 +253,34 @@ def test_minhash_ingest_dedup_matches_batch_incremental(spark, sf_dir, tmp_path)
     sig = spark.read.parquet(store)
     assert sig.count() == n_total - len(expected_drops)
     assert {f"h{i}" for i in range(8)}.issubset(set(sig.columns))
+
+
+def test_minhash_ingest_dedup_quotes_text_column(spark, tmp_path):
+    """A text column whose name needs quoting (it holds a space) goes
+    through shingling; the second batch's duplicate of the first batch's
+    document is dropped against the signature store."""
+    import time
+
+    from warehouse_pg_spark.streaming.ingest_dedup import (
+        minhash_ingest_dedup_available_now,
+    )
+
+    text = "the quick brown fox jumps over the lazy dog again and again"
+    schema = "doc_id BIGINT, `body text` STRING"
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(1, text)], schema).coalesce(1).write.parquet(src)
+    time.sleep(1.1)
+    spark.createDataFrame(
+        [(2, text.upper()), (3, "an entirely different document about spark sql")],
+        schema,
+    ).coalesce(1).write.mode("append").parquet(src)
+
+    out = str(tmp_path / "out")
+    stream = (
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    )
+    minhash_ingest_dedup_available_now(
+        spark, stream, out, str(tmp_path / "store"), str(tmp_path / "chk"),
+        text_col="body text",
+    )
+    assert sorted(r.doc_id for r in spark.read.parquet(out).collect()) == [1, 3]

@@ -24,26 +24,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-# Driver-side schema cache: (path, mtime) -> (raw inferred schema,
-# needs nanosAsLong). A bare spark.read.parquet(path) runs a footer-
-# inference JOB on every call (~0.2 s of pure job roundtrip on the
-# bench box — measured r17); passing the schema explicitly skips it.
-# This caches METADATA only, never data or results — a warehouse
-# resolves schemas from its catalog, not by re-reading file footers
-# per query (reference: relcache, not per-query header reads). The
-# mtime in the key invalidates the entry if the file/dir is rewritten.
-_SCHEMA_CACHE: dict[tuple[str, float], tuple[object, bool]] = {}
-
-# Reader-DataFrame cache: (session id, path, mtime) -> analyzed reader
-# DataFrame (post type-normalization). One level up from the schema
-# cache, same relcache argument: even with an explicit schema,
-# spark.read.parquet re-resolves the relation (file-index listing +
-# analysis py4j round-trips, ~35 ms/call measured r18) on EVERY call,
-# and bench queries make ~35 table() calls per run. The cached object
-# is an immutable logical plan — executing it always scans the parquet
-# files; no data or results are ever cached, and a rewrite of the
-# files (new mtime) invalidates the entry.
-_READER_CACHE: dict[tuple[int, str, float], DataFrame] = {}
+# Driver-side relation cache: path -> (session, mtime, analyzed reader
+# DataFrame). A bare spark.read.parquet(path) runs a footer-inference
+# job and re-resolves the relation (file listing + analysis py4j
+# round-trips) on every call; a warehouse resolves a relation once and
+# reuses it (reference: relcache). The cached object is an immutable
+# logical plan: executing it always scans the files, so no data or
+# results are cached. A hit needs the same session and the same mtime,
+# otherwise the entry is replaced, so there is at most one entry per
+# path; engine writes drop their path's entry (`invalidate`) so a read
+# after a write never depends on mtime granularity.
+_RELATIONS: dict[str, tuple[SparkSession, float, DataFrame]] = {}
 
 
 def _path_mtime(path: str) -> float:
@@ -53,13 +44,14 @@ def _path_mtime(path: str) -> float:
         return -1.0
 
 
-def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
-    """spark.read.parquet with physical-type normalization.
+def invalidate(path: str) -> None:
+    """Forget path's cached relation; call after every write to path."""
+    _RELATIONS.pop(path, None)
 
-    Parquet TIMESTAMP(NANOS) columns (fixture events.ts) are illegal to
-    Spark's reader — read them as long nanos and rebuild microsecond
-    timestamps (integer `div`: double division loses precision on
-    1.7e18-scale nanosecond epochs).
+
+def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
+    """The engine's one parquet read path: a parquet path → DataFrame,
+    through the relation cache, with physical-type normalization.
 
     PG timestamps are tz-naive (reference:
     src/backend/utils/adt/timestamp.c); the engine's policy is that all
@@ -69,44 +61,23 @@ def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
     the session TZ pinned to UTC the NTZ→LTZ cast is value-preserving,
     so normalize every timestamp_ntz column here, at the one read
     boundary every query goes through."""
-    rkey = (id(spark), path, _path_mtime(path))
-    cached = _READER_CACHE.get(rkey)
-    if cached is not None:
-        return cached
-    key = (path, _path_mtime(path))
-    hit = _SCHEMA_CACHE.get(key)
-    if hit is not None:
-        schema, needs_nanos = hit
-        if needs_nanos:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.schema(schema).parquet(path)
-    else:
-        needs_nanos = False
-        try:
-            df = spark.read.parquet(path)
-            _ = df.schema
-        except Exception:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            needs_nanos = True
-            df = spark.read.parquet(path)
-        # a bigint 'ts' means the nanos legacy conf was (or already
-        # is) in force for this table — a cache-hit read in a fresh
-        # session must re-establish it before the footer is parsed
-        if dict(df.dtypes).get("ts") == "bigint":
-            needs_nanos = True
-        _SCHEMA_CACHE[key] = (df.schema, needs_nanos)
-    # Re-read under nanosAsLong leaves ns columns as bigint; detect the
-    # known shape (events.ts) generically: any *ts* bigint col whose
-    # values are ns-scale would be wrong to guess — only rebuild 'ts'.
-    if "ts" in df.columns and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    mtime = _path_mtime(path)
+    hit = _RELATIONS.get(path)
+    if hit is not None and hit[0] is spark and hit[1] == mtime:
+        return hit[2]
+    # entries of stopped sessions can never hit again; drop them
+    for p, (s, _m, _df) in list(_RELATIONS.items()):
+        if s._sc._jsc is None:
+            _RELATIONS.pop(p, None)
+    df = spark.read.parquet(path)
     ntz_cols = [c for c, t in df.dtypes if t == "timestamp_ntz"]
     if ntz_cols:
         df = df.withColumns(
             {c: F.col(c).cast("timestamp") for c in ntz_cols}
         )
-    _READER_CACHE[rkey] = df
+    _RELATIONS[path] = (spark, mtime, df)
     return df
+
 
 # The driver's fixture tables (TESTDATA.md).
 FIXTURE_TABLES = (
@@ -231,12 +202,3 @@ class Catalog:
         info = self.tables.get(name)
         return bool(info and info.distribution[0] == "replicated")
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Convenience: load all fixture tables as DataFrames keyed by name."""
-    out = {}
-    for name in FIXTURE_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            out[name] = read_parquet_table(spark, path)
-    return out

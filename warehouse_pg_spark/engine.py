@@ -19,7 +19,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
-from warehouse_pg_spark import sql_dialect
+from warehouse_pg_spark import catalog, sql_dialect
 from warehouse_pg_spark.catalog import Catalog
 from warehouse_pg_spark.functions.pg import register_pg_functions
 from warehouse_pg_spark.operators.dml import ParquetTable
@@ -1740,10 +1740,11 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         df.withColumn("__part", expr).write.mode("overwrite").partitionBy(
             "__part"
         ).parquet(path)
+        catalog.invalidate(path)
         self.catalog.register_parquet(
             name, path, partition_cols=("__part",)
         )
-        n = self.spark.read.parquet(path).count()
+        n = catalog.read_parquet_table(self.spark, path).count()
         return self._tag(n)
 
     # ----------------------------------------------------------- SQL DML
@@ -1962,10 +1963,8 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         if m:
             name, select = m.group(1).split(".")[-1], m.group(2)
             df = self.spark.sql(select)
-            self.create_table_from(name, df)
-            n = self.spark.read.parquet(
-                os.path.join(self.warehouse_dir, name)
-            ).count()
+            t = self.create_table_from(name, df)
+            n = t.read().count()
             return self._tag(n)
 
         if re.match(r"^MERGE\s+INTO\b", s, re.IGNORECASE):
@@ -2183,6 +2182,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         w = df.write.mode("overwrite")
         if o["format"] == "parquet":
             w.parquet(path)
+            catalog.invalidate(path)
         else:
             w.option("header", o["header"]).option("sep", o["sep"]).csv(path)
         return self._tag(n)
@@ -2198,7 +2198,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         o = self._copy_options(opts)
         schema = t.read().schema
         if o["format"] == "parquet":
-            df = self.spark.read.parquet(path)
+            df = catalog.read_parquet_table(self.spark, path)
             df = df.select(
                 *[df[f.name].cast(f.dataType).alias(f.name) for f in schema.fields]
             )
@@ -2534,6 +2534,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                 # eager write: reads the source fully BEFORE the
                 # originals drop below
                 df.write.mode("overwrite").parquet(path)
+                catalog.invalidate(path)
             except Exception:  # noqa: BLE001 — not a relation
                 return None
             # adoption takes OWNERSHIP: the Spark-catalog original
@@ -2621,6 +2622,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
+        catalog.invalidate(path)
         self.catalog.register_parquet(name, path, partition_cols=partition_by)
         return ParquetTable(self.spark, path)
 
@@ -2656,8 +2658,9 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         path = os.path.join(self.warehouse_dir, f"_mv_{name}")
         df = self.sql(sql)
         df.write.mode("overwrite").parquet(path)
+        catalog.invalidate(path)
         self._matviews[name] = MaterializedView(name, sql, path)
-        self.spark.read.parquet(path).createOrReplaceTempView(name)
+        catalog.read_parquet_table(self.spark, path).createOrReplaceTempView(name)
         return self.spark.table(name)
 
     def refresh_materialized_view(self, name: str) -> DataFrame:

@@ -88,6 +88,10 @@ def asof_join(
     )
 
     unioned = l_tagged.unionByName(r_tagged)
+    # no keys: one global as-of window
+    partition = (
+        f"PARTITION BY {', '.join(f'`{k}`' for k in on)} " if on else ""
+    )
 
     def fill_cols(ts_desc: bool, prefix: str) -> list[Column]:
         # non-strict: right rows at equal ts must precede the left row
@@ -97,8 +101,7 @@ def asof_join(
         side_order = "DESC" if strict else "ASC"
         ts_order = "DESC" if ts_desc else "ASC"
         over = (
-            f"OVER (PARTITION BY {', '.join(f'`{k}`' for k in on)} "
-            f"ORDER BY __ts {ts_order}, __side {side_order} "
+            f"OVER ({partition}ORDER BY __ts {ts_order}, __side {side_order} "
             f"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
         )
         return [

@@ -21,6 +21,8 @@ import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from warehouse_pg_spark import catalog
+
 
 class ParquetTable:
     """A writable parquet-backed table with copy-on-write DML."""
@@ -30,11 +32,12 @@ class ParquetTable:
         self.path = path
 
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        return catalog.read_parquet_table(self.spark, self.path)
 
     def insert(self, df: DataFrame) -> None:
         """INSERT = append new files (no rewrite)."""
         df.write.mode("append").parquet(self.path)
+        catalog.invalidate(self.path)
 
     def _swap_in(self, df: DataFrame) -> None:
         tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
@@ -42,6 +45,7 @@ class ParquetTable:
         old = f"{self.path}.old-{uuid.uuid4().hex[:8]}"
         os.rename(self.path, old)
         os.rename(tmp, self.path)
+        catalog.invalidate(self.path)
         shutil.rmtree(old, ignore_errors=True)
 
     def compact(self, target_file_bytes: int = 128 * 1024 * 1024) -> dict[str, int]:

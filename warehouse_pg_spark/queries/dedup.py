@@ -101,7 +101,7 @@ def _shingles(colname: str, n: int = 3):
     # shingle i = ws[i..i+n-1] joined; sequence over 0..len-n
     return F.expr(
         f"element_at(transform(array("
-        f"split(trim(regexp_replace(lower({colname}), '[^a-z0-9]+', ' ')), ' ')"
+        f"split(trim(regexp_replace(lower(`{colname}`), '[^a-z0-9]+', ' ')), ' ')"
         f"), ws -> array_distinct(transform("
         f"sequence(0, greatest(size(ws) - {n}, 0)), "
         f"i -> concat_ws(' ', slice(ws, i + 1, {n}))))), 1)"

@@ -160,12 +160,9 @@ def table_bytes(sf_dir: str, name: str) -> int:
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load a fixture table, normalizing physical-type quirks
-    (TIMESTAMP(NANOS) → µs; see catalog.read_parquet_table)."""
+    """Load a fixture table through catalog.read_parquet_table."""
     from warehouse_pg_spark.catalog import read_parquet_table
 
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return read_parquet_table(spark, f"{sf_dir}/{name}.parquet")
 
 

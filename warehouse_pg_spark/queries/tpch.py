@@ -126,8 +126,9 @@ def q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     undo (r18: 1.46 s at sf1, 0.88 vs 0.84 broadcast-oc at sf0.1).
     Broadcasting oc keeps the fact streaming with zero exchanges on
     it at every measured scale; past the size guard (orders on disk >
-    2 GiB ⇒ oc in the hundreds of MB) it degrades to the co-shuffled
-    hash join (guide §3.1)."""
+    2 GiB ⇒ oc in the hundreds of MB), or with broadcasts disabled by
+    autoBroadcastJoinThreshold=-1, it degrades to the co-shuffled hash
+    join (guide §3.1)."""
     cust = table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
@@ -140,7 +141,9 @@ def q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     oc = orders.join(cust, orders.o_custkey == cust.c_custkey).select(
         "o_orderkey", "o_orderdate"
     )
-    if _table_bytes(sf_dir, "orders") < 2 << 30:
+    # an explicit broadcast ignores the threshold, so honour its -1 here
+    bcast_off = spark.conf.get("spark.sql.autoBroadcastJoinThreshold").startswith("-")
+    if not bcast_off and _table_bytes(sf_dir, "orders") < 2 << 30:
         oc = F.broadcast(oc)
     else:
         oc = oc.hint("shuffle_hash")

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from warehouse_pg_spark import catalog
+
 
 def range_partition_expr(
     col: Column | str, start, every, unit: str | None = None
@@ -62,7 +64,8 @@ def write_partitioned(
     otherwise `partition_col` must already exist."""
     out = df.withColumn(partition_col, expr) if expr is not None else df
     out.write.mode(mode).partitionBy(partition_col).parquet(path)
+    catalog.invalidate(path)
 
 
 def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    return catalog.read_parquet_table(spark, path)

@@ -31,6 +31,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from warehouse_pg_spark import catalog
+
 
 def _signatures(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, h0..h7) minhash signatures — same algebra as queries/dedup."""
@@ -77,7 +79,7 @@ def minhash_ingest_dedup_available_now(
         if os.path.isdir(store_path) and any(
             f.endswith(".parquet") for f in os.listdir(store_path)
         ):
-            store_sig = spark.read.parquet(store_path)
+            store_sig = catalog.read_parquet_table(spark, store_path)
             cand = (
                 _bands(sig)
                 .alias("a")
@@ -116,6 +118,7 @@ def minhash_ingest_dedup_available_now(
             sig.__id == F.col("__kid"),
         ).drop("__kid")
         kept_sig.write.mode("append").parquet(store_path)
+        catalog.invalidate(store_path)
         sig.unpersist()
 
     q = (
