@@ -122,6 +122,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     steady: dict[str, float] = {}
     errors: dict[str, str] = {}
+    steady_errors: dict[str, str] = {}
     for name, q in sorted(bench_queries.items()):
         # Bench the raw query plan. q.fn is wrapped with the registry's
         # _canonize output-formatting projection (decimal→double,
@@ -163,7 +164,9 @@ def main() -> None:
             fn(spark, query_dir).write.mode("overwrite").format("noop").save()
             steady[name] = round(time.perf_counter() - t0, 4)
         except Exception as exc:
-            print(f"bench: {name} steady pass failed: {exc}", file=sys.stderr)
+            steady_errors[name] = f"{type(exc).__name__}: {exc}"[:500]
+            print(f"bench: {name} steady pass failed: {steady_errors[name]}",
+                  file=sys.stderr)
     total = round(sum(timings.values()), 4)
     # Rounds 1-6 benched exactly these 15; the subtotal keeps the
     # round-over-round trend comparable as new anchors join the set.
@@ -197,6 +200,8 @@ def main() -> None:
         out["polluted"] = True
     if errors:
         out["errors"] = errors
+    if steady_errors:
+        out["steady_errors"] = steady_errors
     print(json.dumps(out))
 
 

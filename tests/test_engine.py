@@ -100,6 +100,69 @@ def test_dml_insert_update_delete(engine, spark, tmp_path):
     assert n == 1
     assert sorted(r.id for r in t.read().collect()) == [1, 2, 4]
 
+    # PG quals: DELETE drops only the rows whose WHERE is TRUE; a NULL
+    # WHERE keeps the row and is not counted
+    path = str(tmp_path / "dml_null_qual")
+    spark.createDataFrame(
+        [(1, 10), (2, None), (3, 30)], "k INT, v INT"
+    ).write.parquet(path)
+    engine.attach_parquet("dml_null_qual", path)
+    tag = engine.sql("DELETE FROM dml_null_qual WHERE v > 15").collect()
+    assert tag[0].rows_affected == 1
+    rows = engine.sql("SELECT k, v FROM dml_null_qual ORDER BY k").collect()
+    assert [tuple(r) for r in rows] == [(1, 10), (2, None)]
+
+    # an assignment is cast to its column's type: k stays INT on disk
+    tag = engine.sql("UPDATE dml_null_qual SET k = k * 1.0").collect()
+    assert tag[0].rows_affected == 2
+    assert spark.read.parquet(path).schema["k"].dataType.simpleString() == "int"
+    rows = engine.sql("SELECT k FROM dml_null_qual ORDER BY k").collect()
+    assert [r.k for r in rows] == [1, 2]
+
+
+def test_dml_statement_runs_one_spark_job(engine, spark, tmp_path):
+    """INSERT, UPDATE and DELETE through Engine.sql each start one Spark
+    job, the write: the row count is taken on the write, the relation is
+    refreshed without a footer-inference job, and the command tag is a
+    local relation whose fetch is not part of the statement."""
+    path = str(tmp_path / "dml_jobs")
+    spark.range(10).selectExpr("id AS k", "id * 10 AS v").write.parquet(path)
+    engine.attach_parquet("dml_jobs", path)
+    sc = spark.sparkContext
+
+    def run(i: int, stmt: str) -> int:
+        group = f"dml-jobs-{i}"
+        sc.setJobGroup(group, stmt)
+        try:
+            tag = engine.sql(stmt)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(jobs) == 1, (stmt, jobs)
+        assert "LogicalRDD" not in tag._jdf.queryExecution().analyzed().toString()
+        assert [(f.name, f.dataType.simpleString()) for f in tag.schema] == [
+            ("rows_affected", "bigint")
+        ]
+        return tag.collect()[0].rows_affected
+
+    statements = [
+        ("INSERT INTO dml_jobs SELECT k + 100, v FROM dml_jobs WHERE k < 4", 4),
+        ("INSERT INTO dml_jobs SELECT k, v FROM dml_jobs WHERE k < 0", 0),
+        ("INSERT INTO dml_jobs VALUES (200, 1), (201, NULL)", 2),
+        ("UPDATE dml_jobs SET v = v + 1 WHERE k >= 100", 6),
+        ("UPDATE dml_jobs SET v = 0 WHERE k < 0", 0),
+        ("DELETE FROM dml_jobs WHERE k >= 100 AND v > 5", 3),
+        ("DELETE FROM dml_jobs WHERE k < 0", 0),
+    ]
+    for i, (stmt, expected) in enumerate(statements):
+        assert run(i, stmt) == expected, stmt
+    rows = engine.sql("SELECT count(*) AS n, sum(v) AS s FROM dml_jobs").collect()
+    assert (rows[0].n, rows[0].s) == (13, 450 + 1 + 2)
+    # a constant-TRUE qual still reports every row it removed
+    assert engine.sql("DELETE FROM dml_jobs").collect()[0].rows_affected == 13
+    assert engine.sql("SELECT count(*) AS n FROM dml_jobs").collect()[0].n == 0
+
 
 def test_dml_merge_upsert(engine, spark, tmp_path):
     """MERGE = PG INSERT ... ON CONFLICT DO UPDATE (nodeModifyTable.c

@@ -1,6 +1,6 @@
 """The one parquet read path: catalog.read_parquet_table and its
-relation cache (one entry per path, session + mtime checked, dropped
-by engine writes)."""
+relation cache (one entry per path, session + mtime checked, replaced
+or dropped by engine writes)."""
 
 from __future__ import annotations
 
@@ -46,6 +46,36 @@ def test_read_after_insert_ignores_mtime(spark, tmp_path):
     # a filesystem too coarse to see the append: same mtime as before
     os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns))
     assert sorted(r.id for r in t.read().collect()) == [0, 1, 2, 3, 4]
+
+
+def test_insert_refresh_matches_inference_on_naive_timestamps(spark, tmp_path):
+    # the table's first file stores a tz-naive timestamp (TIMESTAMP_NTZ);
+    # the insert appends a session-TZ one and rebuilds the relation from
+    # the table's schema without re-inferring it from the footers
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "naive")
+    os.makedirs(path)
+    ts = datetime.datetime(2020, 1, 2, 3, 4, 5)
+    pq.write_table(
+        pa.table({"k": pa.array([1], pa.int64()),
+                  "ts": pa.array([ts], pa.timestamp("us"))}),
+        os.path.join(path, "part-0.parquet"),
+    )
+    eng = Engine(spark=spark, warehouse_dir=str(tmp_path / "wh"))
+    eng.attach_parquet("naive", path)
+    eng.sql("INSERT INTO naive VALUES (2, TIMESTAMP '2021-06-07 08:09:10')")
+    refreshed = catalog.read_parquet_table(spark, path)
+    rows = sorted(tuple(r) for r in refreshed.collect())
+    catalog.invalidate(path)
+    inferred = catalog.read_parquet_table(spark, path)
+    assert refreshed.dtypes == inferred.dtypes == [("k", "bigint"), ("ts", "timestamp")]
+    assert rows == sorted(tuple(r) for r in inferred.collect()) == [
+        (1, ts), (2, datetime.datetime(2021, 6, 7, 8, 9, 10))
+    ]
 
 
 def test_one_entry_per_path_across_sessions(spark, tmp_path):

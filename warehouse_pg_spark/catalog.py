@@ -22,6 +22,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 # Driver-side relation cache: path -> (session, mtime, analyzed reader
@@ -32,8 +33,9 @@ from pyspark.sql import functions as F
 # logical plan: executing it always scans the files, so no data or
 # results are cached. A hit needs the same session and the same mtime,
 # otherwise the entry is replaced, so there is at most one entry per
-# path; engine writes drop their path's entry (`invalidate`) so a read
-# after a write never depends on mtime granularity.
+# path; an engine write replaces its path's entry (`refresh`) or drops
+# it (`invalidate`), so a read after a write never depends on mtime
+# granularity.
 _RELATIONS: dict[str, tuple[SparkSession, float, DataFrame]] = {}
 
 
@@ -45,8 +47,26 @@ def _path_mtime(path: str) -> float:
 
 
 def invalidate(path: str) -> None:
-    """Forget path's cached relation; call after every write to path."""
+    """Forget path's cached relation; call after every write to path
+    that does not go through `refresh`."""
     _RELATIONS.pop(path, None)
+
+
+def _normalized(df: DataFrame) -> DataFrame:
+    ntz_cols = [c for c, t in df.dtypes if t == "timestamp_ntz"]
+    if ntz_cols:
+        df = df.withColumns(
+            {c: F.col(c).cast("timestamp") for c in ntz_cols}
+        )
+    return df
+
+
+def refresh(spark: SparkSession, path: str, schema: StructType) -> None:
+    """Re-resolve path after a write that kept the table's `schema`:
+    the relation is built from that schema, so no footer-inference job
+    runs (ParquetTable writes; other writes call `invalidate`)."""
+    df = _normalized(spark.read.schema(schema).parquet(path))
+    _RELATIONS[path] = (spark, _path_mtime(path), df)
 
 
 def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
@@ -69,12 +89,7 @@ def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
     for p, (s, _m, _df) in list(_RELATIONS.items()):
         if s._sc._jsc is None:
             _RELATIONS.pop(p, None)
-    df = spark.read.parquet(path)
-    ntz_cols = [c for c, t in df.dtypes if t == "timestamp_ntz"]
-    if ntz_cols:
-        df = df.withColumns(
-            {c: F.col(c).cast("timestamp") for c in ntz_cols}
-        )
+    df = _normalized(spark.read.parquet(path))
     _RELATIONS[path] = (spark, mtime, df)
     return df
 

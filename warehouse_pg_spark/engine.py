@@ -2053,8 +2053,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                     return _ret(image)
                 return self._tag(stats["updated"] + stats["inserted"])
             ret = _ret(df) if returning else None
-            n = df.count()
-            t.insert(df)
+            n = t.insert(df)
             self._refresh_view(name, t)
             return ret if ret is not None else self._tag(n)
 
@@ -2209,8 +2208,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                 .option("sep", o["sep"])
                 .csv(path)
             )
-        n = df.count()
-        t.insert(df)
+        n = t.insert(df)
         self._refresh_view(name, t)
         return self._tag(n)
 
@@ -2561,7 +2559,10 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         t.read().createOrReplaceTempView(name)
 
     def _tag(self, n: int) -> DataFrame:
-        return self.spark.createDataFrame([(n,)], "rows_affected BIGINT")
+        """The command tag's row count, as a JVM local relation."""
+        return self.spark.sql(
+            f"SELECT * FROM VALUES (CAST({int(n)} AS BIGINT)) AS t(rows_affected)"
+        )
 
     # ------------------------------------------------------------- catalog
     def attach_fixtures(self, sf_dir: str) -> None:
